@@ -1,6 +1,10 @@
 package graft.operators
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.Base64
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,8 +17,7 @@ import org.apache.spark.sql.functions._
   * Design (the public Delta-Lake/Iceberg pattern, minimized):
   *   - the table is a flat pool of immutable parquet files under
   *     `data/month=M/`, plus an append-only `_log/` of numbered JSON
-  *     entries; entry N is the atomic unit: `{op, adds[{path, month}],
-  *     removes[path]}`;
+  *     entries ([[Entry]] holds the format); entry N is the atomic unit;
   *   - a SNAPSHOT is the replay of entries 1..N (adds minus removes). NO
   *     directory listing is ever needed to plan a read — at 100 TB on an
   *     object store, manifest-based listing (plus month pruning against the
@@ -108,49 +111,90 @@ object CommitLog {
   private def entryPath(table: String, v: Long): Path =
     logDir(table).resolve(f"$v%020d.json")
 
-  /** Parse one committed entry (tiny hand-rolled JSON: we wrote it). */
-  private def parseEntry(s: String): (Seq[AddFile], Seq[String]) = {
-    def strings(field: String): Seq[String] = {
-      val m = java.util.regex.Pattern
-        .compile("\"" + field + "\":\\[(.*?)\\]").matcher(s)
-      if (!m.find()) Nil
-      else "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(m.group(1))
-        .map(_.group(1)).toSeq
+  /** One log entry: a commit (op append / merge / delete / compact /
+    * retain) or a checkpoint (op "checkpoint", adds = the whole live set).
+    * On disk it is one JSON object with these fields, in this order:
+    *   - `op`;
+    *   - `adds`, `months`, `tsmins`, `tsmaxs`: parallel arrays with one
+    *     slot per added file (path, month, event-time bounds as decimal
+    *     strings);
+    *   - `removes`: the removed paths;
+    *   - `blooms`, only when some add carries a key bloom: parallel to
+    *     `adds`, "" for a file without one;
+    *   - `token`, optional: the idempotency token;
+    *   - `schema`, optional: the schema JSON, base64-encoded to keep the
+    *     on-disk format compatible with tables already written.
+    * A missing array reads as empty and missing bounds as unbounded
+    * (entries written before stats existed). */
+  private final case class Entry(op: String, adds: Seq[AddFile],
+                                 removes: Seq[String] = Nil,
+                                 token: Option[String] = None,
+                                 schemaJson: Option[String] = None)
+
+  private val json = new ObjectMapper()
+
+  private def writeEntry(e: Entry): String = {
+    val o = json.createObjectNode()
+    def strings(field: String, xs: Seq[String]): Unit = {
+      val a = o.putArray(field)
+      xs.foreach(x => a.add(x))
     }
-    val adds = strings("adds")
-    val months = strings("months")
-    val mins = strings("tsmins")
-    val maxs = strings("tsmaxs")
-    val blooms = strings("blooms")
-    val files = adds.zipWithIndex.map { case (p, i) =>
-      val lo = if (i < mins.length) mins(i).toLong else Long.MinValue
-      val hi = if (i < maxs.length) maxs(i).toLong else Long.MaxValue
-      val kb = if (i < blooms.length && blooms(i).nonEmpty) Some(blooms(i)) else None
-      AddFile(p, months(i), lo, hi, kb)
-    }
-    (files, strings("removes"))
+    o.put("op", e.op)
+    strings("adds", e.adds.map(_.path))
+    strings("months", e.adds.map(_.month))
+    strings("tsmins", e.adds.map(_.tsMin.toString))
+    strings("tsmaxs", e.adds.map(_.tsMax.toString))
+    strings("removes", e.removes)
+    if (e.adds.exists(_.keyBloom.isDefined))
+      strings("blooms", e.adds.map(_.keyBloom.getOrElse("")))
+    e.token.foreach(o.put("token", _))
+    e.schemaJson.foreach(sc =>
+      o.put("schema", Base64.getEncoder.encodeToString(sc.getBytes(UTF_8))))
+    json.writeValueAsString(o)
   }
 
-  private def renderEntry(op: String, adds: Seq[AddFile], removes: Seq[String],
-                          token: Option[String] = None,
-                          schemaJson: Option[String] = None): String = {
-    def arr(xs: Seq[String]) = xs.map(x => "\"" + x + "\"").mkString("[", ",", "]")
-    val tok = token.map(t => s""","token":"$t"""").getOrElse("")
-    // schema rides base64'd: the tiny hand-rolled parser stays regex-safe
-    val sch = schemaJson.map(s => s""","schema":"${java.util.Base64.getEncoder
-      .encodeToString(s.getBytes("UTF-8"))}"""").getOrElse("")
-    // blooms only materialize when at least one file carries one (keeps
-    // bloom-free tables' entries byte-stable vs earlier versions)
-    val blm = if (adds.exists(_.keyBloom.isDefined))
-      s""","blooms":${arr(adds.map(_.keyBloom.getOrElse("")))}""" else ""
-    s"""{"op":"$op","adds":${arr(adds.map(_.path))},"months":${arr(adds.map(_.month))},"tsmins":${arr(adds.map(_.tsMin.toString))},"tsmaxs":${arr(adds.map(_.tsMax.toString))},"removes":${arr(removes)}$blm$tok$sch}"""
+  private def readEntry(p: Path): Entry = {
+    val o = json.readTree(Files.readString(p))
+    def strings(field: String): IndexedSeq[String] = {
+      val a = o.path(field)
+      (0 until a.size).map(a.get(_).asText)
+    }
+    def text(field: String): Option[String] = Option(o.get(field)).map(_.asText)
+    val (months, mins, maxs, blooms) =
+      (strings("months"), strings("tsmins"), strings("tsmaxs"), strings("blooms"))
+    val adds = strings("adds").zipWithIndex.map { case (path, i) =>
+      AddFile(path, months(i),
+        mins.lift(i).fold(Long.MinValue)(_.toLong),
+        maxs.lift(i).fold(Long.MaxValue)(_.toLong),
+        blooms.lift(i).filter(_.nonEmpty))
+    }
+    Entry(o.path("op").asText, adds, strings("removes"), text("token"),
+      text("schema").map(b => new String(Base64.getDecoder.decode(b), UTF_8)))
   }
 
-  private def parseSchema(s: String): Option[String] = {
-    val m = java.util.regex.Pattern.compile("\"schema\":\"([^\"]*)\"").matcher(s)
-    if (m.find())
-      Some(new String(java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8"))
-    else None
+  /** Ascending versions of the `<v><suffix>` files in the log: committed
+    * entries by default, checkpoints with ".checkpoint.json". In-flight
+    * `.tmp-*` files never match. */
+  private def committedVersions(table: String,
+                                suffix: String = ".json"): Seq[Long] =
+    if (!Files.isDirectory(logDir(table))) Nil
+    else listDir(logDir(table)).map(_.getFileName.toString)
+      .filter(_.endsWith(suffix)).flatMap(_.stripSuffix(suffix).toLongOption)
+      .sorted
+
+  /** Apply `entries` in order on top of `base`: adds replace by path,
+    * removes drop, the newest recorded schema wins. */
+  private def replay(base: Snapshot, version: Long,
+                     entries: Iterator[Entry]): Snapshot = {
+    val live = scala.collection.mutable.LinkedHashMap[String, AddFile]()
+    base.files.foreach(a => live(a.path) = a)
+    var schema = base.schemaJson
+    entries.foreach { e =>
+      e.adds.foreach(a => live(a.path) = a)
+      e.removes.foreach(live.remove)
+      schema = e.schemaJson.orElse(schema)
+    }
+    Snapshot(version, live.values.toSeq, schema)
   }
 
   /** Thrown inside [[commit]] when the idempotency token is already in the
@@ -166,23 +210,10 @@ object CommitLog {
     * (checkpoints at or before the version speed it up the same way).
     * Entries are never rewritten, so any historical version stays
     * reconstructible until [[vacuum]] removes its unreferenced files. */
-  def snapshotAt(table: String, version: Long): Snapshot = {
-    val dir = logDir(table)
-    if (!Files.isDirectory(dir)) return Snapshot(0L, Nil)
-    val live = scala.collection.mutable.LinkedHashMap[String, AddFile]()
-    var schema: Option[String] = None
-    (1L to version).foreach { v =>
-      val p = entryPath(table, v)
-      if (Files.exists(p)) {
-        val s = Files.readString(p)
-        val (adds, removes) = parseEntry(s)
-        adds.foreach(a => live(a.path) = a)
-        removes.foreach(live.remove)
-        parseSchema(s).foreach(sc => schema = Some(sc))
-      }
-    }
-    Snapshot(version, live.values.toSeq, schema)
-  }
+  def snapshotAt(table: String, version: Long): Snapshot =
+    if (!Files.isDirectory(logDir(table))) Snapshot(0L, Nil)
+    else replay(Snapshot(0L, Nil), version, (1L to version).iterator
+      .map(entryPath(table, _)).filter(Files.exists(_)).map(readEntry))
 
   /** The schema to RECORD for a write: union of the table's current
     * columns and the written frame's (existing definitions win, all
@@ -223,11 +254,6 @@ object CommitLog {
     if (files.isEmpty)
       throw new IllegalStateException(s"no files at version $version of $table")
     readFiles(spark, table, snap, files)
-  }
-
-  private def parseOp(s: String): String = {
-    val m = java.util.regex.Pattern.compile("\"op\":\"(.*?)\"").matcher(s)
-    if (m.find()) m.group(1) else "append"
   }
 
   /** CHANGE FEED (the Delta CDF analog): the logical row changes committed
@@ -271,8 +297,7 @@ object CommitLog {
       val p = entryPath(table, v)
       if (!Files.exists(p)) Nil
       else {
-        val s = Files.readString(p)
-        val (adds, removes) = parseEntry(s)
+        val Entry(op, adds, removes, _, _) = readEntry(p)
         def removedAsDeletes(): Seq[DataFrame] = {
           val paths = removes.map(r => Paths.get(table).resolve(r))
           val gone = paths.filterNot(Files.exists(_))
@@ -280,7 +305,7 @@ object CommitLog {
             s"change feed for version $v needs vacuumed files (${gone.head})")
           Seq(read(paths, "delete", v))
         }
-        parseOp(s) match {
+        op match {
           case "append" if adds.nonEmpty =>
             Seq(read(adds.map(a => Paths.get(table).resolve(a.path)), "insert", v))
           case "retain" if removes.nonEmpty => removedAsDeletes()
@@ -306,20 +331,10 @@ object CommitLog {
     * cursor this way — state lives IN the log, atomic with the commit it
     * describes: no side file, no crash window between "applied" and
     * "recorded". */
-  def latestToken(table: String, prefix: String, lastK: Int = 500): Option[String] = {
-    val dir = logDir(table)
-    if (!Files.isDirectory(dir)) return None
-    val versions = listDir(dir).iterator
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".json") && !n.contains("checkpoint") && !n.startsWith("."))
-      .map(_.stripSuffix(".json").toLong).toSeq.sorted.takeRight(lastK).reverse
-    val pat = java.util.regex.Pattern.compile(
-      "\"token\":\"(" + java.util.regex.Pattern.quote(prefix) + "[^\"]*)\"")
-    versions.iterator.flatMap { v =>
-      val m = pat.matcher(Files.readString(entryPath(table, v)))
-      if (m.find()) Some(m.group(1)) else None
-    }.take(1).toSeq.headOption
-  }
+  def latestToken(table: String, prefix: String, lastK: Int = 500): Option[String] =
+    committedVersions(table).takeRight(lastK).reverseIterator
+      .flatMap(v => readEntry(entryPath(table, v)).token.filter(_.startsWith(prefix)))
+      .nextOption()
 
   /** Physically delete data files no longer referenced by the CURRENT
     * snapshot (removed by compaction/retention, or left by a crashed
@@ -375,11 +390,7 @@ object CommitLog {
         .filter(p => p.getFileName.toString.startsWith(".stage-") &&
           Files.isDirectory(p) && newestMtime(p) < cutoff)
         .foreach { p =>
-          def rm(q: Path): Unit = {
-            if (Files.isDirectory(q)) listDir(q).iterator.foreach(rm)
-            Files.deleteIfExists(q); ()
-          }
-          rm(p)
+          deleteRecursively(p)
           deleted += p.getFileName.toString
         }
     deleted.result()
@@ -429,73 +440,41 @@ object CommitLog {
     * on top of the still-valid cached state; full replay only if neither
     * works. */
   def snapshot(table: String): Snapshot = {
-    val dir = logDir(table)
-    if (!Files.isDirectory(dir)) return Snapshot(0L, Nil)
-    val names = listDir(dir).iterator
-      .map(_.getFileName.toString).toSeq
-    val versions = names.filter(n => n.endsWith(".json") && !n.contains("checkpoint"))
-      .filter(!_.startsWith("."))
-      .map(_.stripSuffix(".json").toLong).sorted
+    if (!Files.isDirectory(logDir(table))) return Snapshot(0L, Nil)
+    val versions = committedVersions(table)
     val latest = versions.lastOption.getOrElse(0L)
     val fp = entryFingerprint(table, latest)
     val cached = snapCache.get(table)
     if (cached != null && cached.version == latest &&
         fp.contains((cached.mtime, cached.size, cached.crc)))
       return cached.snap
+    manifestReplays.incrementAndGet()
     // Delta base: cached state is reusable iff its own head entry is still
     // the same file (same fingerprint ⇒ the log grew, wasn't recreated).
-    val deltaBase: Option[Snapshot] =
+    val base =
       if (cached != null && cached.version > 0L && cached.version < latest &&
           entryFingerprint(table, cached.version)
             .contains((cached.mtime, cached.size, cached.crc)))
-        Some(cached.snap)
-      else None
-    manifestReplays.incrementAndGet()
-    val live = scala.collection.mutable.LinkedHashMap[String, AddFile]()
-    var schema: Option[String] = None
-    val from = deltaBase match {
-      case Some(base) =>
-        base.files.foreach(a => live(a.path) = a)
-        schema = base.schemaJson
-        base.version
-      case None =>
-        val checkpoints = names.filter(_.endsWith(".checkpoint.json"))
-          .map(_.stripSuffix(".checkpoint.json").toLong).sorted.reverse
-        // newest checkpoint that parses wins; a bad one falls back to older/none
-        val base = checkpoints.iterator.flatMap { c =>
-          try {
-            val s = Files.readString(checkpointPath(table, c))
-            // strict shape check: the lenient regex parser would read garbage
-            // as an empty (valid-looking) checkpoint and silently drop files
-            if (!s.startsWith("{\"op\":\"checkpoint\"") || !s.endsWith("}")) None
-            else Some((c, parseEntry(s)._1, parseSchema(s)))
-          } catch { case _: Exception => None }
-        }.take(1).toSeq.headOption
-        base.foreach { case (_, adds, sc) =>
-          adds.foreach(a => live(a.path) = a); schema = sc
-        }
-        base.map(_._1).getOrElse(0L)
-    }
-    versions.filter(_ > from).foreach { v =>
-      val s = Files.readString(entryPath(table, v))
-      val (adds, removes) = parseEntry(s)
-      adds.foreach(a => live(a.path) = a)
-      removes.foreach(live.remove)
-      parseSchema(s).foreach(sc => schema = Some(sc))
-    }
-    val snap = Snapshot(latest, live.values.toSeq, schema)
+        cached.snap
+      else newestCheckpoint(table)
+    val snap = replay(base, latest, versions.iterator
+      .filter(_ > base.version).map(v => readEntry(entryPath(table, v))))
     fp.foreach { case (m, sz, crc) =>
       snapCache.put(table, CachedSnap(latest, m, sz, crc, snap))
     }
     snap
   }
 
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
-  }
+  /** The live set at the newest checkpoint that parses as one; a corrupt
+    * or half-written checkpoint falls back to older ones, then to empty. */
+  private def newestCheckpoint(table: String): Snapshot =
+    committedVersions(table, ".checkpoint.json").reverseIterator.flatMap { c =>
+      try {
+        val e = readEntry(checkpointPath(table, c))
+        if (e.op == "checkpoint") Some(replay(Snapshot(0L, Nil), c, Iterator(e)))
+        else None
+      } catch { case _: Exception => None }
+    }.nextOption().getOrElse(Snapshot(0L, Nil))
 
   /** `Files.list` with the stream CLOSED (try/finally): the returned
     * stream holds a directory file descriptor that is otherwise released
@@ -508,6 +487,11 @@ object CommitLog {
     try st.iterator().asScala.toVector finally st.close()
   }
 
+  private def deleteRecursively(p: Path): Unit = {
+    if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
+    Files.deleteIfExists(p); ()
+  }
+
   /** Commit `adds`/`removes` with optimistic retry. Returns the committed
     * version. Ops that remove files re-validate on every retry that their
     * removes are still live; a concurrent delete aborts the commit. */
@@ -518,7 +502,8 @@ object CommitLog {
              expectVersion: Option[Long] = None): Long = {
     Files.createDirectories(logDir(table))
     val tmp = logDir(table).resolve(s".tmp-${java.util.UUID.randomUUID()}")
-    Files.writeString(tmp, renderEntry(op, adds, removes, token, schemaJson))
+    val entry = Entry(op, adds, removes, token, schemaJson)
+    Files.writeString(tmp, writeEntry(entry))
     try {
       var attempt = 0
       while (true) {
@@ -546,13 +531,9 @@ object CommitLog {
             // we are v's unique claimant → no checkpoint write race; the
             // live set at v = snapshot at v-1 plus this entry (and the
             // latest schema, so a checkpoint-based replay keeps it)
-            val live = scala.collection.mutable.LinkedHashMap[String, AddFile]()
-            snap.files.foreach(a => live(a.path) = a)
-            adds.foreach(a => live(a.path) = a)
-            removes.foreach(live.remove)
-            Files.writeString(checkpointPath(table, v),
-              renderEntry("checkpoint", live.values.toSeq, Nil,
-                schemaJson = schemaJson.orElse(snap.schemaJson)))
+            val live = replay(snap, v, Iterator(entry))
+            Files.writeString(checkpointPath(table, v), writeEntry(
+              Entry("checkpoint", live.files, schemaJson = live.schemaJson)))
           }
           return v
         } else {
@@ -572,16 +553,9 @@ object CommitLog {
     * (micro-batch epoch ids) only ever recur within the last few commits —
     * a streaming recovery replays the tail, not history — so the scan is
     * bounded regardless of table age. */
-  def tokenApplied(table: String, token: String, lastK: Int = 50): Boolean = {
-    val dir = logDir(table)
-    if (!Files.isDirectory(dir)) return false
-    val versions = listDir(dir).iterator
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".json") && !n.contains("checkpoint") && !n.startsWith("."))
-      .map(_.stripSuffix(".json").toLong).toSeq.sorted.takeRight(lastK)
-    val needle = "\"token\":\"" + token + "\""
-    versions.exists(v => Files.readString(entryPath(table, v)).contains(needle))
-  }
+  def tokenApplied(table: String, token: String, lastK: Int = 50): Boolean =
+    committedVersions(table).takeRight(lastK)
+      .exists(v => readEntry(entryPath(table, v)).token.contains(token))
 
   /** Transactional append: stage month-partitioned parquet files into the
     * data pool (invisible to readers), then commit one entry. Blind
@@ -600,10 +574,7 @@ object CommitLog {
              assumeUnique: Boolean = false,
              keyBlooms: Boolean = false,
              bloomCol: Option[String] = None): Long = {
-    token.foreach { t =>
-      if (tokenApplied(table, t)) return snapshot(table).version
-    }
-    ()
+    if (token.exists(tokenApplied(table, _))) return snapshot(table).version
     val staging = Files.createTempDirectory(Paths.get(
       { Files.createDirectories(Paths.get(table)); table }), ".stage-")
     // assumeUnique: callers whose rows are unique by CONSTRUCTION (the
@@ -668,11 +639,25 @@ object CommitLog {
     // it to every file with zero footer reads at plan time.
     val schemaDelta =
       mergedSchemaDelta(snapshot(table).schemaJson, deduped.schema)
-    try commit(table, "append", adds, token = token, schemaJson = schemaDelta)
+    commitStaged(table, "append", adds, token = token, schemaJson = schemaDelta)
+  }
+
+  /** Commit adds that were staged into `data/` (invisible until now). If
+    * the commit is lost they are deleted again rather than left for
+    * [[vacuum]]: a replayed token (a racing replay won) returns the current
+    * version, a conflicting writer rethrows so the caller re-derives. */
+  private def commitStaged(table: String, op: String, adds: Seq[AddFile],
+                           removes: Seq[String] = Nil,
+                           token: Option[String] = None,
+                           schemaJson: Option[String] = None,
+                           expectVersion: Option[Long] = None): Long = {
+    def rollback(): Unit =
+      adds.foreach(a => Files.deleteIfExists(Paths.get(table).resolve(a.path)))
+    try commit(table, op, adds, removes, token = token, schemaJson = schemaJson,
+      expectVersion = expectVersion)
     catch {
-      case _: AlreadyApplied => // replay raced us: discard, table unchanged
-        adds.foreach(a => Files.deleteIfExists(Paths.get(table).resolve(a.path)))
-        snapshot(table).version
+      case _: AlreadyApplied => rollback(); snapshot(table).version
+      case e @ (_: ConcurrentWrite | _: ConcurrentDelete) => rollback(); throw e
     }
   }
 
@@ -694,11 +679,7 @@ object CommitLog {
             adds += AddFile(s"data/month=$month/$name", month)
           }
       }
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) listDir(p).iterator.foreach(rm)
-      Files.deleteIfExists(p); ()
-    }
-    rm(staging)
+    deleteRecursively(staging)
     adds.result()
   }
 
@@ -761,7 +742,7 @@ object CommitLog {
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
       a.copy(keyBloom =
-        Some(java.util.Base64.getEncoder.encodeToString(bos.toByteArray)))
+        Some(Base64.getEncoder.encodeToString(bos.toByteArray)))
     }
 
   /** Decoded-bloom cache, keyed by the base64 payload itself: identical
@@ -779,7 +760,7 @@ object CommitLog {
       if (bloomCache.size > 4096) bloomCache.clear()
       val bf = org.apache.spark.util.sketch.BloomFilter
         .readFrom(new java.io.ByteArrayInputStream(
-          java.util.Base64.getDecoder.decode(b64)))
+          Base64.getDecoder.decode(b64)))
       bloomCache.putIfAbsent(b64, bf)
       bf
     }
@@ -887,7 +868,7 @@ object CommitLog {
         .map { case (lo, hi) => a.copy(tsMin = lo, tsMax = hi) }
         .getOrElse(a)
     }
-    commit(table, "delete", adds, removes = hit.map(_.path))
+    commitStaged(table, "delete", adds, removes = hit.map(_.path))
     hit.size
   }
 
@@ -908,10 +889,7 @@ object CommitLog {
                   token: Option[String] = None,
                   statsHint: Option[(Long, Long)] = None,
                   expectVersion: Option[Long] = None): Long = {
-    token.foreach { t =>
-      if (tokenApplied(table, t)) return snapshot(table).version
-    }
-    ()
+    if (token.exists(tokenApplied(table, _))) return snapshot(table).version
     val spark = batch.sparkSession
     val snap = snapshot(table)
     val deduped = batch.dropDuplicates(idCol)
@@ -971,10 +949,7 @@ object CommitLog {
                    statsHint: Option[(Long, Long)] = None,
                    expectVersion: Option[Long] = None,
                    preShuffled: Boolean = false): Long = {
-    token.foreach { t =>
-      if (tokenApplied(table, t)) return snapshot(table).version
-    }
-    ()
+    if (token.exists(tokenApplied(table, _))) return snapshot(table).version
     val snap = snapshot(table)
     // may be a fresh table's FIRST commit (a rollup state table starts
     // with a merge, not an append)
@@ -1000,19 +975,8 @@ object CommitLog {
         .map { case (lo, hi) => a.copy(tsMin = lo, tsMax = hi) }
         .getOrElse(a)
     }
-    try commit(table, "merge", adds, removes = removes, token = token,
-      schemaJson = mergedSchemaDelta(snap.schemaJson, staged.schema),
-      expectVersion = expectVersion)
-    catch {
-      case _: AlreadyApplied =>
-        adds.foreach(a => Files.deleteIfExists(Paths.get(table).resolve(a.path)))
-        snapshot(table).version
-      case e @ (_: ConcurrentWrite | _: ConcurrentDelete) =>
-        // staged adds were never visible; roll them back and surface the
-        // conflict so the caller re-derives from the new state
-        adds.foreach(a => Files.deleteIfExists(Paths.get(table).resolve(a.path)))
-        throw e
-    }
+    commitStaged(table, "merge", adds, removes, token,
+      mergedSchemaDelta(snap.schemaJson, staged.schema), expectVersion)
   }
 
   /** Concurrent-safe compaction of one month: read that month's files from
@@ -1056,14 +1020,7 @@ object CommitLog {
     val adds = if (old.exists(_.keyBloom.isDefined))
       attachKeyBlooms(spark, table, adds0, bloomCol.getOrElse(idCol))
     else adds0
-    try commit(table, "compact", adds, removes = old.map(_.path))
-    catch {
-      case e: ConcurrentDelete =>
-        // roll back the staged adds (never visible) and surface the conflict
-        adds.foreach(a =>
-          Files.deleteIfExists(Paths.get(table).resolve(a.path)))
-        throw e
-    }
+    commitStaged(table, "compact", adds, removes = old.map(_.path))
   }
 
   /** Retention: drop all files of months strictly before `keepFromMonth` in

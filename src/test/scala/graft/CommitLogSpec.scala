@@ -138,6 +138,60 @@ class CommitLogSpec extends GraftSuite {
       "corrupt checkpoint must not change the snapshot")
   }
 
+  test("a key bloom sized for 200k rows round-trips through the log") {
+    // ~320 KB of base64 in one entry: reading it must not need stack
+    // depth proportional to its length
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(200000, 0.01)
+    (0 until 1000).foreach(i => bf.putString(s"id$i"))
+    val bytes = new java.io.ByteArrayOutputStream()
+    bf.writeTo(bytes)
+    val b64 = java.util.Base64.getEncoder.encodeToString(bytes.toByteArray)
+    assert(b64.length > 300000, b64.length)
+    val big = AddFile("data/month=2024-01/big.parquet", "2024-01", keyBloom = Some(b64))
+    val t = freshTable()
+    CommitLog.commit(t, "append", Seq(big))
+    assert(CommitLog.snapshot(t).files == Seq(big))
+    assert(CommitLog.filesForKey(t, "id7") == ((Seq(big), 1)))
+  }
+
+  test("entry format is pinned: fixed entries encode to the golden bytes and decode back") {
+    import java.nio.file.{Files, Paths}
+    val schema = """{"type":"struct","fields":[{"name":"id","type":"string","nullable":true,"metadata":{}}]}"""
+    val old = AddFile("data/month=2023-12/part-old.parquet", "2023-12")
+    val a1 = AddFile("data/month=2024-01/part-a.parquet", "2024-01",
+      1704067200000000L, 1704153599999999L, Some("AAAAAQAAAAcAAAABAAAAAAAIAg=="))
+    val a2 = AddFile("data/month=2024-02/part-b.parquet", "2024-02",
+      1706745600000000L, 1706831999999999L, Some("AAAAAQAAAAcAAAAB+/8AAAAAAA=="))
+    val golden1 =
+      """{"op":"append","adds":["data/month=2023-12/part-old.parquet"],"months":["2023-12"],"tsmins":["-9223372036854775808"],"tsmaxs":["9223372036854775807"],"removes":[]}"""
+    val golden2 =
+      """{"op":"merge","adds":["data/month=2024-01/part-a.parquet","data/month=2024-02/part-b.parquet"],""" +
+      """"months":["2024-01","2024-02"],""" +
+      """"tsmins":["1704067200000000","1706745600000000"],""" +
+      """"tsmaxs":["1704153599999999","1706831999999999"],""" +
+      """"removes":["data/month=2023-12/part-old.parquet"],""" +
+      """"blooms":["AAAAAQAAAAcAAAABAAAAAAAIAg==","AAAAAQAAAAcAAAAB+/8AAAAAAA=="],""" +
+      """"token":"sync-7",""" +
+      """"schema":"eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiaWQiLCJ0eXBlIjoic3RyaW5nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX1dfQ=="}"""
+    def entry(table: String, v: Long) = Paths.get(table, "_log", f"$v%020d.json")
+
+    val t = freshTable()
+    CommitLog.commit(t, "append", Seq(old))
+    CommitLog.commit(t, "merge", Seq(a1, a2), removes = Seq(old.path),
+      token = Some("sync-7"), schemaJson = Some(schema))
+    assert(Files.readString(entry(t, 1)) == golden1)
+    assert(Files.readString(entry(t, 2)) == golden2)
+
+    val u = freshTable()
+    Files.createDirectories(entry(u, 1).getParent)
+    Files.writeString(entry(u, 1), golden1)
+    Files.writeString(entry(u, 2), golden2)
+    assert(CommitLog.snapshotAt(u, 1) == CommitLog.Snapshot(1, Seq(old)))
+    assert(CommitLog.snapshot(u) == CommitLog.Snapshot(2, Seq(a1, a2), Some(schema)))
+    assert(CommitLog.tokenApplied(u, "sync-7") && !CommitLog.tokenApplied(u, "sync-"))
+    assert(CommitLog.latestToken(u, "sync-").contains("sync-7"))
+  }
+
   test("time travel reads an historical version; vacuum bounds it to live files") {
     val t = freshTable()
     CommitLog.append(sampleBatch(0 until 30, "2024-01"), t, "id", "ts")
